@@ -5,6 +5,11 @@ nested-loop joins where an equi conjunct exists."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
+
 from etl_lala_spark.plans import query_fns
 
 
@@ -251,82 +256,60 @@ def test_behavior_similarity_rank_uses_window_group_limit(spark, sf_dir):
     assert "WindowGroupLimit" in plan
 
 
-def test_driver_rotation_window_is_valid():
-    """The driver materializes CORRECTNESS rows for the first ~50 registry
-    entries, so the rotation order IS the verification budget. Round 6:
-    the pin list is empty — tier 1 front-loads never-checked registrations
-    and tier 3 re-verifies greens in LEAST-RECENTLY-GREEN order (round-5
-    verdict #1). Guards: (a, round-4 verdict #3) no never-driver-checked
-    query may ever sort outside the first 50; (b) verified queries must be
-    ordered by staleness — oldest green/ran round first — so the driver
-    budget always lands on the stalest signal."""
-    from etl_lala_spark.plans import (
-        _DRIVER_WINDOW,
-        _correctness_records,
-        all_queries,
-        changed_since_green,
-        oracle_sqls,
+_REGISTRY_IMPORT_CHILD = textwrap.dedent(
+    """
+    import os
+    import sys
+
+    pkg = os.path.join(os.getcwd(), "etl_lala_spark") + os.sep
+    write_flags = os.O_WRONLY | os.O_RDWR | os.O_CREAT | os.O_APPEND
+
+    # Recorded rather than raised: a caller's ``except Exception`` could
+    # swallow an exception raised from the hook.
+    violations = []
+
+    def hook(event, args):
+        if event == "subprocess.Popen":
+            violations.append(f"spawned {args[1]}")
+        if event == "open" and isinstance(args[0], str):
+            mode, flags = args[1], args[2]
+            writes = (
+                any(c in mode for c in "wax+") if isinstance(mode, str)
+                else bool(flags & write_flags)
+            )
+            if writes and os.path.abspath(args[0]).startswith(pkg):
+                violations.append(f"wrote {args[0]}")
+
+    sys.addaudithook(hook)
+    from etl_lala_spark.plans import oracle_sqls, query_fns
+
+    qs = query_fns()
+    oracle_sqls()
+    if violations:
+        sys.exit("registry import side effects: " + "; ".join(violations))
+    print(",".join(list(qs)[:3]))
+    """
+)
+
+
+def test_registry_import_is_side_effect_free():
+    """Importing and listing the registry spawns no process and writes no
+    file under the package, and the registry is in registration order."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    # -B: the interpreter's own bytecode cache is not a registry write.
+    out = subprocess.run(
+        [sys.executable, "-B", "-c", _REGISTRY_IMPORT_CHILD],
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        timeout=300,
     )
-
-    qs = all_queries()
-    last_checked, last_green = _correctness_records()
-    assert last_green, "repo carries at least the round-1 CORRECTNESS record"
-    assert len(_DRIVER_WINDOW) <= 50
-    for name in _DRIVER_WINDOW:
-        assert name in qs, f"window pins unregistered query {name}"
-    # Window names occupy the exact front of the full ordering…
-    w = len(_DRIVER_WINDOW)
-    assert list(qs)[:w] == list(_DRIVER_WINDOW)
-    # …and the oracle-backed subsequence leads the oracle-only ordering too.
-    win_oracle = [n for n in _DRIVER_WINDOW if qs[n].oracle is not None]
-    assert list(oracle_sqls())[: len(win_oracle)] == win_oracle
-    # Guard (a): every query with no driver row in any CORRECTNESS record
-    # must appear within the driver's 50-row cap.
-    order = list(qs)
-    never = {n for n in qs if n not in last_checked}
-    for n in never:
-        assert order.index(n) < 50, (
-            f"never-driver-checked query {n} at position {order.index(n)} — "
-            f"outside the driver's 50-row window; shrink _DRIVER_WINDOW"
-        )
-    # Never-checked queries not pinned must sort immediately behind the
-    # window, ahead of every re-check.
-    queued = [n for n in order[w:] if n in never]
-    assert order[w : w + len(queued)] == queued
-    # Oracle-backed checked-but-never-green (red awaiting retry) outrank
-    # every verified re-check among the unpinned remainder.
-    tail = order[w + len(queued):]
-    red = [n for n in tail if qs[n].oracle is not None and n not in last_green]
-    assert tail[: len(red)] == red, "red retries must precede verified re-checks"
-    # Guard (b): the verified remainder splits into the changed-since-green
-    # pins (tier 3 — evidence invalidated by a later code change, r10
-    # verdict task 1) followed by plain re-checks (tier 4), each sorted
-    # least-recently-verified first.
-    verified = tail[len(red):]
-    changed = changed_since_green()
-    ch = [n for n in verified if n in changed]
-    plain = [n for n in verified if n not in changed]
-    assert verified[: len(ch)] == ch, (
-        "changed-since-green pins must precede plain re-checks"
-    )
-
-    def vintage(n: str) -> int:
-        return last_green[n] if qs[n].oracle is not None else last_checked[n]
-
-    for seq in (ch, plain):
-        st = [vintage(n) for n in seq]
-        assert st == sorted(st), (
-            "re-checks must be least-recently-verified first within a tier"
-        )
-    # The concrete round-6 payoff, now on the PLAIN remainder (pins occupy
-    # their slots by design and may fill the cap entirely): no plain
-    # verified query outside the cap is staler than the plain ones inside.
-    plain_in = [n for n in order[:50] if n in plain]
-    plain_out = [n for n in order[50:] if n in plain]
-    if plain_in and plain_out:
-        assert min(vintage(n) for n in plain_in) <= min(
-            vintage(n) for n in plain_out
-        ), "a staler plain verified query sits outside the 50-row cap"
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split()[-1].split(",") == [
+        "q1_pricing_summary",
+        "q3_shipping_priority",
+        "q5_local_supplier_volume",
+    ]
 
 
 def test_new_curation_operators_plan_shapes(spark, sf_dir):
@@ -517,124 +500,6 @@ def test_headline_scan_budget_holds(spark, sf_dir):
         if c["scan"] > want["scan"] or c["python_eval"] > want["python_eval"]:
             failures.append((name, {k: c[k] for k in ("scan", "python_eval")}, want))
     assert not failures, failures
-
-
-def test_rotation_window_recheck_slots_go_to_stalest_cohort():
-    """Round-7 rotation hygiene (round-6 verdict #8): after tier 1 (the
-    never-driver-checked registrations of this round), the window's
-    re-check slots must be filled by the OLDEST-vintage cohort — entering
-    round 7 that is the 37 queries whose latest green is r2, so the
-    staleness floor provably rises each round. Phrased vintage-relative so
-    the assertion keeps holding in later rounds."""
-    from etl_lala_spark.plans import (
-        _DRIVER_WINDOW,
-        _correctness_records,
-        all_queries,
-        changed_since_green,
-    )
-
-    qs = all_queries()
-    last_checked, last_green = _correctness_records()
-    order = list(qs)
-    window = order[:50]
-
-    def staleness(n: str) -> int:
-        return (
-            last_green[n]
-            if qs[n].oracle is not None and n in last_green
-            else last_checked[n]
-        )
-
-    never = [n for n in window if n not in last_checked]
-    # Tier-2 retries (oracle-backed, checked, NEVER hash-green — the
-    # registry front-loads them ahead of every re-check) are excluded from
-    # the re-check-slot assertions so one future red row on a new query
-    # doesn't fail this test for an unrelated reason. Likewise tier-0
-    # manual pins and tier-3 changed-since-green pins (r10 verdict task 1:
-    # invalidated evidence outranks stale evidence) occupy window slots by
-    # design. Rows-only queries are tier-4 like greens (mirrors
-    # plans/__init__.py key()).
-    retries = [
-        n
-        for n in order
-        if n in last_checked
-        and qs[n].oracle is not None
-        and n not in last_green
-    ]
-    pinned = set(_DRIVER_WINDOW) | changed_since_green()
-    greens = [
-        n
-        for n in order
-        if n in last_checked and n not in retries and n not in pinned
-    ]
-    oldest = min(staleness(n) for n in greens)
-    cohort = [n for n in greens if staleness(n) == oldest]
-    reserved = len(never) + len(retries) + len(
-        [p for p in pinned if p in qs and p in last_checked]
-    )
-    if reserved + len(cohort) <= 50:
-        missing = [n for n in cohort if n not in window]
-        assert not missing, (
-            f"stalest (r{oldest}-vintage) cohort not fully inside the "
-            f"50-row window: {missing}"
-        )
-    else:
-        rechecks = [n for n in window if n in greens]
-        assert all(staleness(n) == oldest for n in rechecks), (
-            "window re-check slots must be exclusively the oldest cohort "
-            "when it overflows the cap"
-        )
-
-
-def test_change_aware_pins_precede_staleness_rechecks():
-    """Round-10 verdict task 1: a verified query whose dependency
-    fingerprint differs from the tree its last green tested must sort
-    ahead of every same-or-older plain staleness re-check, and the
-    machinery must be deterministic and total (every registered query
-    fingerprints)."""
-    from etl_lala_spark.plans import (
-        _DRIVER_WINDOW,
-        _correctness_records,
-        all_queries,
-        changed_since_green,
-    )
-    from etl_lala_spark.plans import _change_tracking as ct
-
-    qs = all_queries()
-    fps = ct.fingerprints(ct._working_reader())
-    assert set(fps) == set(qs), "every registered query must fingerprint"
-    assert ct.fingerprints(ct._working_reader()) == fps  # deterministic
-
-    changed = changed_since_green()
-    assert changed <= set(qs)
-    last_checked, last_green = _correctness_records()
-    order = list(qs)
-
-    def staleness(n):
-        return (
-            last_green[n]
-            if qs[n].oracle is not None and n in last_green
-            else last_checked.get(n, 99)
-        )
-
-    plain_greens = [
-        n
-        for n in order
-        if n in last_checked
-        and n not in changed
-        and n not in _DRIVER_WINDOW  # tier-0 manual pins sort first by design
-        and not (qs[n].oracle is not None and n not in last_green)
-    ]
-    if changed and plain_greens:
-        worst_changed = max(order.index(n) for n in changed)
-        # every plain re-check whose evidence is at least as old must sort
-        # AFTER every changed pin
-        for n in plain_greens:
-            if staleness(n) <= min(staleness(c) for c in changed):
-                assert order.index(n) > worst_changed, (
-                    n,
-                    "plain re-check sorted ahead of a changed-since-green pin",
-                )
 
 
 def test_per_host_shuffle_skew_posture(spark):

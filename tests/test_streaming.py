@@ -209,34 +209,6 @@ def test_stream_incremental_load_skips_existing_partitions(spark, sf_dir, tmp_pa
     assert spark.read.parquet(table).count() == n1
 
 
-def test_transform_with_state_progress_matches_legacy(spark, event_dir):
-    """The Spark 4 transformWithState form agrees with the
-    applyInPandasWithState form on the same input: same per-user stride
-    rows, same final totals.
-
-    transformWithState's driver worker imports protobuf at runtime; this
-    environment ships no google.protobuf, so the agreement check only runs
-    where the dependency exists (the processor itself is plain pandas)."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from etl_lala_spark.streaming import tws
-
-    stream = windows.read_event_stream(spark, event_dir)
-    new_rows = windows.run_to_memory(
-        tws.attach_progress_tws(stream), "t_progress_tws"
-    ).collect()
-    legacy_rows = windows.run_to_memory(
-        stateful.attach_progress(windows.read_event_stream(spark, event_dir)),
-        "t_progress_legacy",
-    ).collect()
-    key = lambda r: (r["user_id"], r["emitted"])
-    new_set = {(r["user_id"], r["total_events"], r["total_value"], r["emitted"]) for r in new_rows}
-    legacy_set = {
-        (r["user_id"], r["total_events"], r["total_value"], r["emitted"]) for r in legacy_rows
-    }
-    assert len(new_rows) > 0
-    assert new_set == legacy_set
-
-
 def test_stream_stream_interval_join_matches_batch(spark, sf_dir, event_dir):
     """Stream-stream watermarked interval join produces exactly the batch
     join's pairs (availableNow processes everything, so no rows are lost to
@@ -543,36 +515,6 @@ def test_streaming_ewma_matches_batch(spark, sf_dir, tmp_path):
         for r in query_fns()["events_ewma_smoothing"](spark, sf_dir).collect()
     }
     assert final == want
-
-
-def test_transform_with_state_ewma_matches_legacy(spark, event_dir):
-    """The transformWithState EWMA twin agrees with the
-    applyInPandasWithState form: same final per-user (n, smoothed value).
-    Self-skips where google.protobuf (the tws driver-worker dependency) is
-    absent — the processor itself is plain pandas."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from etl_lala_spark.streaming import tws
-
-    def finals(rows):
-        out = {}
-        for r in rows:
-            if r["user_id"] not in out or r["n_events"] > out[r["user_id"]][0]:
-                out[r["user_id"]] = (r["n_events"], round(r["ewma_value"], 6))
-        return out
-
-    new = finals(
-        windows.run_to_memory(
-            tws.attach_ewma_tws(windows.read_event_stream(spark, event_dir)),
-            "t_ewma_tws",
-        ).collect()
-    )
-    legacy = finals(
-        windows.run_to_memory(
-            stateful.attach_ewma(windows.read_event_stream(spark, event_dir)),
-            "t_ewma_legacy",
-        ).collect()
-    )
-    assert len(new) > 0 and new == legacy
 
 
 def test_live_leaderboard_matches_batch(spark, sf_dir, event_dir):
