@@ -420,7 +420,7 @@ def datasus_dbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     or DBF-layout bug breaks the hash match.
 
     The driver-side fixture write is 200 rows (generation, not the operator
-    path); the decode itself runs in executors via mapInPandas."""
+    path); the decode itself runs in executors via mapInArrow."""
     from etl_lala_spark.plans._gates import fixture_region
     from etl_lala_spark.sources.dbc import read_dbc
 
@@ -492,7 +492,6 @@ def datasus_dbc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             [("PAPE2501", 0, 100), ("PAPE2502", 100, 200)], n_rows=200,
         )
 
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     register_dbc_source(spark)
     records = (
         spark.read.format("dbc")

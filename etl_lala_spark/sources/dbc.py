@@ -3,10 +3,12 @@
 The reference ships each `.dbc` (PKWare-compressed DBF) to an external Python
 service that runs dbc2dbf + dbfread and streams records back
 (OTIMIZACAO_API_PYTHON.md:190-207,270-287). Here the decode runs *inside* the
-engine: a pure-Python DBF parser (dBase III layout, public spec) executed as
-Arrow-batched ``mapInPandas`` over ``binaryFile`` rows — the idiomatic
-replacement for "POST rows to a Python service". `.dbc` decompression uses
-the pure-Python PKWare implode codec in
+engine: :func:`decode_file` turns one file's bytes into an Arrow
+``RecordBatch`` with a pure-Python DBF parser (dBase III layout, public
+spec), and every reader calls it — :func:`read_dbc` as ``mapInArrow`` over
+``binaryFile`` rows, the ``dbc`` DataSource batch and stream readers once
+per file partition (:mod:`etl_lala_spark.sources.dbc_datasource`). `.dbc`
+decompression uses the pure-Python PKWare implode codec in
 :mod:`etl_lala_spark.sources.implode`, so the whole path runs in-engine with
 no third-party binary dependency.
 
@@ -17,28 +19,47 @@ decoding, column names discovered from the file header (SURVEY.md §1.2).
 from __future__ import annotations
 
 import struct
+from collections import Counter
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_lala_spark.sources import implode
 
-HAVE_DBC_CODEC = True  # pure-Python implode codec, no third-party dependency
+PROVENANCE_COL = "arquivo_origem"
+
+
+def _dbf_fields(data: bytes) -> list[tuple[str, int]]:
+    """(name, length) of each field descriptor in a dBase III header:
+    32-byte descriptors from offset 32, 11-byte null-padded names, ended by
+    a 0x0D terminator that must lie inside the declared header length (u16
+    at offset 8). Raises ``ValueError`` when there is no terminator (the
+    bytes are not a DBF header) or a field name repeats (the record table
+    would have two columns of one name)."""
+    header_len = int.from_bytes(data[8:10], "little")
+    end = min(header_len, len(data))
+    term = next((o for o in range(32, end, 32) if data[o] == 0x0D), None)
+    if term is None:
+        raise ValueError(
+            f"not a DBF header: no 0x0D terminator within the declared "
+            f"{header_len}-byte header"
+        )
+    fields = [
+        (data[o : o + 11].split(b"\x00", 1)[0].decode("latin1").strip(), data[o + 16])
+        for o in range(32, term, 32)
+    ]
+    dups = sorted(n for n, k in Counter(n for n, _ in fields).items() if k > 1)
+    if dups:
+        raise ValueError(f"duplicate DBF field names {dups}")
+    return fields
 
 
 def parse_dbf_header(data: bytes) -> list[str]:
-    """Column names from a dBase III header (32-byte field descriptors,
-    11-byte null-padded names, until the 0x0D terminator)."""
-    names = []
-    off = 32
-    while off < len(data) and data[off] != 0x0D:
-        raw = data[off : off + 11]
-        names.append(raw.split(b"\x00", 1)[0].decode("latin1").strip())
-        off += 32
-    return names
+    """Column names from a dBase III header (see :func:`_dbf_fields`)."""
+    return [name for name, _ in _dbf_fields(data)]
 
 
 def parse_dbf(
@@ -84,19 +105,10 @@ def parse_dbf_columns(
     header_len = struct.unpack("<H", data[8:10])[0]
     record_len = struct.unpack("<H", data[10:12])[0]
 
-    fields: list[tuple[str, int]] = []
-    off = 32
-    while off < len(data) and data[off] != 0x0D:
-        raw = data[off : off + 11]
-        name = raw.split(b"\x00", 1)[0].decode("latin1").strip()
-        length = data[off + 16]
-        fields.append((name, length))
-        off += 32
-
     # (name, record offset, length) for each decoded field; header order.
     sel: list[tuple[str, int, int]] = []
     fo = 1
-    for name, flen in fields:
+    for name, flen in _dbf_fields(data):
         if project is None or name in project:
             sel.append((name, fo, flen))
         fo += flen
@@ -162,59 +174,42 @@ def infer_dbf_columns(binaries: DataFrame, content_col: str = "content") -> list
     return parse_dbf_header(bytes(first["head"]))
 
 
-def read_dbf(
-    binaries: DataFrame,
-    content_col: str = "content",
-    name_col: str = "member_basename",
+def decode_file(
+    name: str,
+    data: bytes,
+    columns: list[str],
     limit: int | None = None,
-    columns: list[str] | None = None,
     project: list[str] | None = None,
-) -> DataFrame:
-    """Decode DBF binary rows into an all-string record table with
-    ``arquivo_origem`` provenance (reference record shape,
-    ESTRUTURA_DADOS_PROCESSADOS.md:80-109).
-
-    Column list is discovered from the data unless supplied; files whose
-    header disagrees raise inside the task (fail-fast, like the reference's
-    ``sucesso !== true`` guard). ``project`` pushes column pruning into the
-    per-record decoder (see ``parse_dbf``); the output schema keeps the
-    projected fields in file order.
-    """
-    cols = columns if columns is not None else infer_dbf_columns(binaries, content_col)
-    if project is not None:
-        cols = [c for c in cols if c in project]
-    schema = T.StructType(
-        [T.StructField(c, T.StringType()) for c in cols]
-        + [T.StructField("arquivo_origem", T.StringType())]
-    )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            for name, blob in zip(pdf[name_col], pdf[content_col]):
-                # Columnar decode → dict-of-columns DataFrame: no row-list
-                # materialization, no per-cell dtype coercion pass.
-                file_cols, colvals = parse_dbf_columns(
-                    bytes(blob), limit=limit, project=project
-                )
-                if file_cols != cols:
-                    raise ValueError(
-                        f"{name}: columns {file_cols[:3]}... != expected {cols[:3]}..."
-                    )
-                # Positional construction: dict(zip(names, ...)) would
-                # silently collapse duplicate DBF field names (legal in the
-                # wild) onto the last duplicate's values.
-                f = pd.DataFrame(dict(enumerate(colvals)))
-                f.columns = cols
-                f["arquivo_origem"] = name.rsplit(".", 1)[0]
-                frames.append(f)
-            yield (
-                pd.concat(frames, ignore_index=True)
-                if frames
-                else pd.DataFrame(columns=[*cols, "arquivo_origem"])
+    corrupt_col: str | None = None,
+) -> pa.RecordBatch:
+    """The one per-file decode: a file's bytes → an all-string Arrow batch
+    of ``columns``, then ``arquivo_origem`` (``name`` without its extension,
+    ESTRUTURA_DADOS_PROCESSADOS.md:80-109), then ``corrupt_col`` when set.
+    ``.dbc`` names are decompressed first, any other name parses as raw DBF.
+    A file that fails to decode or whose columns differ from ``columns``
+    raises (the reference's ``sucesso !== true`` guard); with
+    ``corrupt_col`` set it becomes ONE row instead: data NULL, the error
+    text in ``corrupt_col`` (PERMISSIVE, reference R5)."""
+    names = [*columns, PROVENANCE_COL] + ([corrupt_col] if corrupt_col else [])
+    error = None
+    try:
+        dbf = dbc_to_dbf(data) if name.lower().endswith(".dbc") else data
+        file_cols, colvals = parse_dbf_columns(dbf, limit=limit, project=project)
+        if file_cols != columns:
+            raise ValueError(
+                f"{name}: columns {file_cols[:3]}... != expected {columns[:3]}..."
             )
-
-    return binaries.select(name_col, content_col).mapInPandas(decode, schema=schema)
+        n = len(colvals[0]) if colvals else 0
+    except Exception as exc:  # noqa: BLE001 — per-file boundary
+        if not corrupt_col:
+            raise
+        colvals, n = [[None]] * len(columns), 1
+        error = f"{type(exc).__name__}: {exc}"[:500]
+    arrays = [pa.array(vals, type=pa.string()) for vals in colvals]
+    arrays.append(pa.array([name.rsplit(".", 1)[0]] * n, type=pa.string()))
+    if corrupt_col:
+        arrays.append(pa.array([error] * n, type=pa.string()))
+    return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
 def read_dbc(
@@ -226,73 +221,42 @@ def read_dbc(
     project: list[str] | None = None,
     mode: str = "FAILFAST",
 ) -> DataFrame:
-    """S8 end-to-end: decode ``.dbc`` binary rows (implode-compressed DBF)
-    into the all-string record table. Schema discovery needs no
-    decompression — the DBF header is stored verbatim at the front of a
-    ``.dbc`` — and the per-file decompress+parse runs distributed inside
-    ``mapInPandas``, one task per batch of files. ``project`` prunes columns
-    inside the decoder (decompression still touches every byte — implode
-    output is sequential — but field slicing/decoding skips non-projected
-    fields).
+    """S8 end-to-end: decode ``.dbc``/``.dbf`` binary rows into the
+    all-string record table with ``arquivo_origem`` provenance. The member
+    name's extension picks the decoder (:func:`decode_file`). Schema
+    discovery needs no decompression — the DBF header is stored verbatim at
+    the front of a ``.dbc`` — and the per-file decode runs distributed
+    inside ``mapInArrow``, one task per batch of files. ``project`` prunes
+    columns inside the decoder (decompression still touches every byte —
+    implode output is sequential — but field slicing/decoding skips
+    non-projected fields); the output keeps the projected fields in file
+    order.
 
     ``mode="FAILFAST"`` (default) raises inside the task on a corrupt or
-    schema-mismatched file — the reference's ``sucesso !== true`` guard.
-    ``mode="PERMISSIVE"`` instead emits ONE error row per bad file (data
-    columns NULL, ``_decode_error`` = exception class + message) and keeps
-    decoding the rest — the Spark PERMISSIVE/badRecords convention the
-    NDJSON source already follows (R5), so one truncated archive member
-    cannot kill a 100 TB backfill. Pass explicit ``columns`` when the
-    FIRST file may be corrupt (schema inference reads its header)."""
+    schema-mismatched file. ``mode="PERMISSIVE"`` instead emits ONE error
+    row per bad file (data columns NULL, ``_decode_error`` = exception class
+    + message) and keeps decoding the rest — the Spark PERMISSIVE/badRecords
+    convention the NDJSON source already follows (R5), so one truncated
+    archive member cannot kill a 100 TB backfill. Pass explicit ``columns``
+    when the FIRST file may be corrupt (schema inference reads its header
+    and fails planning on a non-DBF one)."""
     if mode not in ("FAILFAST", "PERMISSIVE"):
         raise ValueError(f"unknown mode {mode}")
     cols = columns if columns is not None else infer_dbf_columns(binaries, content_col)
     if project is not None:
         cols = [c for c in cols if c in project]
-    permissive = mode == "PERMISSIVE"
-    out_cols = [*cols, "arquivo_origem"] + (["_decode_error"] if permissive else [])
+    corrupt_col = "_decode_error" if mode == "PERMISSIVE" else None
+    out_cols = [*cols, PROVENANCE_COL] + ([corrupt_col] if corrupt_col else [])
     schema = T.StructType([T.StructField(c, T.StringType()) for c in out_cols])
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            for name, blob in zip(pdf[name_col], pdf[content_col]):
-                origem = name.rsplit(".", 1)[0]
-                try:
-                    # Columnar decode (same fast path as read_dbf): one
-                    # latin1 call per column, no rows->columns re-transpose.
-                    file_cols, colvals = parse_dbf_columns(
-                        dbc_to_dbf(bytes(blob)), limit=limit, project=project
-                    )
-                    if file_cols != cols:
-                        raise ValueError(
-                            f"{name}: columns {file_cols[:3]}... != "
-                            f"expected {cols[:3]}..."
-                        )
-                except Exception as ex:  # noqa: BLE001 — per-file boundary
-                    if not permissive:
-                        raise
-                    f = pd.DataFrame(
-                        [[None] * len(cols)], columns=cols, dtype=object
-                    )
-                    f["arquivo_origem"] = origem
-                    f["_decode_error"] = f"{type(ex).__name__}: {str(ex)[:100]}"
-                    frames.append(f)
-                    continue
-                # Positional construction (see read_dbf): preserves data
-                # under duplicate DBF field names.
-                f = pd.DataFrame(dict(enumerate(colvals)))
-                f.columns = cols
-                f["arquivo_origem"] = origem
-                if permissive:
-                    f["_decode_error"] = None
-                frames.append(f)
-            yield (
-                pd.concat(frames, ignore_index=True)
-                if frames
-                else pd.DataFrame(columns=out_cols)
-            )
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for name, blob in zip(
+                batch.column(0).to_pylist(), batch.column(1).to_pylist()
+            ):
+                yield decode_file(name, blob, cols, limit, project, corrupt_col)
 
-    return binaries.select(name_col, content_col).mapInPandas(decode, schema=schema)
+    return binaries.select(name_col, content_col).mapInArrow(decode, schema=schema)
 
 
 def write_dbf(columns: list[str], rows: list[list[str]], field_len: int = 20) -> bytes:

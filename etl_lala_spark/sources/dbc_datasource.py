@@ -3,7 +3,7 @@
 SURVEY.md §4 names this as the long-term shape for the S8 decode path
 ("optionally a DSv2 source later", src/datasus/datasus.service.ts:307-388 →
 in-engine decode): instead of the caller wiring ``binaryFile`` +
-``mapInPandas`` by hand, the format registers as a first-class source —
+``read_dbc`` by hand, the format registers as a first-class source —
 
     spark.dataSource.register(DbcDataSource)
     spark.read.format("dbc").load("/data/*.dbc")
@@ -29,9 +29,10 @@ and the standard DataSource V2 contracts do the rest:
   micro-batch with checkpointed exactly-once file tracking
   (:class:`DbcStreamReader`).
 
-Decode semantics are shared with :mod:`etl_lala_spark.sources.dbc` (all
-values stringified, latin1, deleted rows skipped) — this module is only the
-DataSource plumbing around ``parse_dbf``/``dbc_to_dbf``.
+Every file is decoded by :func:`etl_lala_spark.sources.dbc.decode_file`,
+the same per-file decode ``read_dbc`` runs (all values stringified, latin1,
+deleted rows skipped, one error row per bad file under ``corruptColumn``) —
+this module is only the DataSource plumbing around it.
 """
 
 from __future__ import annotations
@@ -55,9 +56,13 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StringType, StructField, StructType
 
-from etl_lala_spark.sources.dbc import dbc_to_dbf, parse_dbf_columns, parse_dbf_header
-
-PROVENANCE_COL = "arquivo_origem"
+from etl_lala_spark.sources.dbc import (
+    PROVENANCE_COL,
+    dbf_to_dbc,
+    decode_file,
+    parse_dbf_header,
+    write_dbf,
+)
 
 
 def _list_files(path: str) -> list[str]:
@@ -75,13 +80,17 @@ def _basename_no_ext(path: str) -> str:
     return os.path.basename(path).rsplit(".", 1)[0]
 
 
-def _decode_file(path: str, limit: int | None) -> tuple[list[str], list[list[str]]]:
-    """(column names, one value list per column) — columnar, Arrow-ready."""
-    with open(path, "rb") as fh:
+def _read_file(reader: "DbcReader | DbcStreamReader", partition) -> Iterator[object]:
+    """``read`` of both the batch and the stream reader: one file, one batch."""
+    with open(partition.path, "rb") as fh:
         data = fh.read()
-    if path.lower().endswith(".dbc"):
-        data = dbc_to_dbf(data)
-    return parse_dbf_columns(data, limit=limit)
+    yield decode_file(
+        os.path.basename(partition.path),
+        data,
+        reader.columns,
+        limit=reader.limit,
+        corrupt_col=reader.corrupt_col,
+    )
 
 
 @dataclass
@@ -133,35 +142,7 @@ class DbcReader(DataSourceReader):
         return [DbcInputPartition(p) for p in self.files]
 
     def read(self, partition: DbcInputPartition) -> Iterator["object"]:
-        import pyarrow as pa
-
-        origem = _basename_no_ext(partition.path)
-        names = [*self.columns, PROVENANCE_COL]
-        if self.corrupt_col:
-            names.append(self.corrupt_col)
-        try:
-            cols, colvals = _decode_file(partition.path, self.limit)
-            if cols != self.columns:
-                raise ValueError(
-                    f"{partition.path}: columns {cols[:3]}... != inferred "
-                    f"schema {self.columns[:3]}... (heterogeneous file set)"
-                )
-        except Exception as exc:
-            if not self.corrupt_col:
-                raise
-            # PERMISSIVE: one error row per corrupt file — data columns
-            # NULL, provenance + error message set.
-            arrays = [pa.array([None], type=pa.string()) for _ in self.columns]
-            arrays.append(pa.array([origem], type=pa.string()))
-            arrays.append(pa.array([str(exc)[:500]], type=pa.string()))
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-            return
-        n = len(colvals[0]) if colvals else 0
-        arrays = [pa.array(vals, type=pa.string()) for vals in colvals]
-        arrays.append(pa.array([origem] * n, type=pa.string()))
-        if self.corrupt_col:
-            arrays.append(pa.array([None] * n, type=pa.string()))
-        yield pa.RecordBatch.from_arrays(arrays, names=names)
+        return _read_file(self, partition)
 
 
 class DbcStreamReader(DataSourceStreamReader):
@@ -204,36 +185,7 @@ class DbcStreamReader(DataSourceStreamReader):
         return [DbcInputPartition(p) for p in new]
 
     def read(self, partition: DbcInputPartition) -> Iterator["object"]:
-        import pyarrow as pa
-
-        origem = _basename_no_ext(partition.path)
-        names = [*self.columns, PROVENANCE_COL]
-        if self.corrupt_col:
-            names.append(self.corrupt_col)
-        try:
-            cols, colvals = _decode_file(partition.path, self.limit)
-            if cols != self.columns:
-                raise ValueError(
-                    f"{partition.path}: columns {cols[:3]}... != stream "
-                    f"schema {self.columns[:3]}..."
-                )
-        except Exception as exc:
-            if not self.corrupt_col:
-                raise
-            # PERMISSIVE (same contract as the batch reader): the corrupt
-            # arrival becomes one provenance-tagged error row; the stream
-            # keeps running and the file is still marked consumed.
-            arrays = [pa.array([None], type=pa.string()) for _ in self.columns]
-            arrays.append(pa.array([origem], type=pa.string()))
-            arrays.append(pa.array([str(exc)[:500]], type=pa.string()))
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-            return
-        n = len(colvals[0]) if colvals else 0
-        arrays = [pa.array(vals, type=pa.string()) for vals in colvals]
-        arrays.append(pa.array([origem] * n, type=pa.string()))
-        if self.corrupt_col:
-            arrays.append(pa.array([None] * n, type=pa.string()))
-        yield pa.RecordBatch.from_arrays(arrays, names=names)
+        return _read_file(self, partition)
 
     def commit(self, end: dict) -> None:
         pass
@@ -264,7 +216,6 @@ class DbcWriter(DataSourceArrowWriter):
         self.field_len = field_len
 
     def write(self, iterator) -> "DbcWriteCommit":
-        import os
         import uuid
 
         rows: list[list[str]] = []
@@ -279,14 +230,11 @@ class DbcWriter(DataSourceArrowWriter):
         if not rows:  # empty partition → no file
             return DbcWriteCommit(path="", n_rows=0)
         tmp = os.path.join(self.path, f".tmp-{uuid.uuid4().hex}.dbc")
-        from etl_lala_spark.sources.dbc import dbf_to_dbc, write_dbf
-
         with open(tmp, "wb") as fh:
             fh.write(dbf_to_dbc(write_dbf(self.columns, rows, self.field_len)))
         return DbcWriteCommit(path=tmp, n_rows=len(rows))
 
     def commit(self, messages) -> None:
-        import os
         import re
 
         # Continue numbering after any PART already present so mode=append
@@ -304,8 +252,6 @@ class DbcWriter(DataSourceArrowWriter):
             )
 
     def abort(self, messages) -> None:
-        import os
-
         for m in messages:
             if m is not None and m.path and os.path.exists(m.path):
                 os.remove(m.path)
@@ -341,14 +287,10 @@ class DbcDataSource(DataSource):
         files = self._files()
         cols: list[str] = []
         for p in files:
-            # Read the DECLARED header length (u16 at offset 8) rather than
-            # a fixed prefix: a >126-field file has a header past 4 KiB and
-            # a fixed-size read would silently truncate its column list.
+            # The header length field is u16, so a 64 KiB prefix holds any
+            # header (a 4 KiB one truncated files past ~126 fields).
             with open(p, "rb") as fh:
-                head = fh.read(32)
-                if len(head) >= 12:
-                    declared = int.from_bytes(head[8:10], "little")
-                    head += fh.read(max(0, declared - 32))
+                head = fh.read(65535)
             try:
                 cols = parse_dbf_header(head)
                 if cols:
@@ -365,34 +307,32 @@ class DbcDataSource(DataSource):
                 f"column of the scanned files; pick a name not in "
                 f"{[*cols, PROVENANCE_COL]}"
             )
-        extra = [StructField(PROVENANCE_COL, StringType())]
-        if corrupt_col:
-            extra.append(StructField(corrupt_col, StringType()))
-        return StructType(
-            [StructField(c, StringType()) for c in cols] + extra
-        )
+        names = [*cols, PROVENANCE_COL] + ([corrupt_col] if corrupt_col else [])
+        return StructType([StructField(c, StringType()) for c in names])
 
-    def reader(self, schema: StructType) -> DbcReader:
+    def _read_options(
+        self, schema: StructType
+    ) -> tuple[list[str], int | None, str | None]:
+        """(data columns, per-file limit, corrupt column) for both readers."""
         limit = self.options.get("limit")
         corrupt_col = self.options.get("corruptColumn")
         skip = {PROVENANCE_COL, corrupt_col}
-        return DbcReader(
-            self._files(),
+        return (
             [f.name for f in schema.fields if f.name not in skip],
             int(limit) if limit is not None else None,
-            corrupt_col=corrupt_col,
+            corrupt_col,
         )
 
-    def writer(self, schema: StructType, overwrite: bool) -> DbcWriter:
-        import glob as g
-        import os
+    def reader(self, schema: StructType) -> DbcReader:
+        return DbcReader(self._files(), *self._read_options(schema))
 
+    def writer(self, schema: StructType, overwrite: bool) -> DbcWriter:
         path = self.options.get("path")
         if not path:
             raise ValueError("format('dbc') write requires a path")
         os.makedirs(path, exist_ok=True)
         if overwrite:
-            for p in g.glob(os.path.join(path, "*.dbc")):
+            for p in globmod.glob(os.path.join(path, "*.dbc")):
                 os.remove(p)
         cols = [f.name for f in schema.fields if f.name != PROVENANCE_COL]
         bad = [
@@ -408,15 +348,7 @@ class DbcDataSource(DataSource):
         return DbcWriter(path, cols, int(self.options.get("field_len", 20)))
 
     def streamReader(self, schema: StructType) -> DbcStreamReader:
-        limit = self.options.get("limit")
-        corrupt_col = self.options.get("corruptColumn")
-        skip = {PROVENANCE_COL, corrupt_col}
-        return DbcStreamReader(
-            self.options.get("path"),
-            [f.name for f in schema.fields if f.name not in skip],
-            int(limit) if limit is not None else None,
-            corrupt_col=corrupt_col,
-        )
+        return DbcStreamReader(self.options.get("path"), *self._read_options(schema))
 
 
 def register_dbc_source(spark) -> None:

@@ -66,7 +66,7 @@ def test_dbf_roundtrip_and_decode(spark, staging):
     members = arc.extract_archive_members(
         arc.read_binary_files(spark, zdir, glob="*.zip"), suffix=".dbf"
     )
-    records = dbc.read_dbf(members)
+    records = dbc.read_dbc(members)
     out = records.collect()
     assert len(out) == 3
     assert out[0]["AP_MVM"] == "202501"
@@ -197,14 +197,18 @@ def test_dbf_projection_pushdown(spark, staging):
     members = arc.extract_archive_members(
         arc.read_binary_files(spark, zdir, glob="*.zip"), suffix=".dbf"
     )
-    records = dbc.read_dbf(members, project=["AP_CONDIC"])
+    records = dbc.read_dbc(members, project=["AP_CONDIC"])
     assert records.columns == ["AP_CONDIC", "arquivo_origem"]
     assert sorted(r["AP_CONDIC"] for r in records.collect()) == ["EP", "PG"]
 
-    # and through the .dbc (implode) path
+    # and through the .dbc (implode) path: the member name's extension says
+    # how to decode, so the compressed member is named .dbc
     from pyspark.sql import functions as F
 
-    dbc_members = members.withColumn("content", F.udf(lambda b: dbc.dbf_to_dbc(bytes(b)), "binary")("content"))
+    dbc_members = members.select(
+        F.regexp_replace("member_basename", r"\.dbf$", ".dbc").alias("member_basename"),
+        F.udf(lambda b: dbc.dbf_to_dbc(bytes(b)), "binary")("content").alias("content"),
+    )
     rec2 = dbc.read_dbc(dbc_members, project=["AP_MVM"])
     assert rec2.columns == ["AP_MVM", "arquivo_origem"]
     assert sorted(r["AP_MVM"] for r in rec2.collect()) == ["202501", "202502"]
@@ -386,6 +390,104 @@ def test_dbc_source_permissive_corrupt_file(spark, sf_dir, tmp_path):
     assert len(bad) == 1
     assert bad[0]["arquivo_origem"] == "ZBAD"
     assert bad[0]["A"] is None and bad[0]["B"] is None
+
+    # A garbage file that sorts first must not become the inferred schema:
+    # under corruptColumn inference skips it (it still yields its error
+    # row); without corruptColumn planning fails on its header.
+    with open(os.path.join(d, "AAA0.dbc"), "wb") as fh:
+        fh.write(b"not a dbc at all" * 8)
+    with _pytest.raises(Exception, match="no 0x0D terminator"):
+        spark.read.format("dbc").load(d).schema
+    got = (
+        spark.read.format("dbc")
+        .option("corruptColumn", "_error")
+        .load(d)
+        .collect()
+    )
+    good = [r for r in got if r["_error"] is None]
+    bad = sorted((r["arquivo_origem"], r["A"], r["B"]) for r in got if r["_error"])
+    assert sorted((r["A"], r["B"]) for r in good) == [("1", "x"), ("2", "y")]
+    assert bad == [("AAA0", None, None), ("ZBAD", None, None)]
+
+
+def test_dbf_duplicate_field_names_rejected(spark, tmp_path):
+    """Two DBF fields of one name would make two record columns of one
+    name; both readers refuse such a file at planning, naming the field."""
+    from etl_lala_spark.sources.dbc_datasource import register_dbc_source
+
+    register_dbc_source(spark)
+    data = dbc.write_dbf(["A", "A", "B"], [["1", "2", "3"]], 4)
+    with pytest.raises(ValueError, match=r"duplicate DBF field names \['A'\]"):
+        dbc.parse_dbf_header(data)
+
+    members = spark.createDataFrame(
+        [("DUP.dbf", bytearray(data))], "member_basename string, content binary"
+    )
+    with pytest.raises(ValueError, match="duplicate DBF field names"):
+        dbc.read_dbc(members)
+
+    d = str(tmp_path / "dup")
+    os.makedirs(d)
+    with open(os.path.join(d, "DUP.dbf"), "wb") as fh:
+        fh.write(data)
+    with pytest.raises(Exception, match="duplicate DBF field names"):
+        spark.read.format("dbc").load(d).schema
+
+
+def test_dbc_readers_agree(spark, tmp_path):
+    """read_dbc over binaryFile members, the dbc batch source and the dbc
+    stream source decode one directory (good .dbc, good .dbf, corrupt .dbc)
+    to identical rows, error text included: all three run decode_file."""
+    from pyspark.sql import functions as F
+
+    from etl_lala_spark.sources.dbc_datasource import register_dbc_source
+
+    register_dbc_source(spark)
+    d = str(tmp_path / "land")
+    os.makedirs(d)
+    cols = ["AP_CONDIC", "AP_VL_TOTAL"]
+    with open(os.path.join(d, "PAPE2501.dbc"), "wb") as fh:
+        fh.write(dbc.dbf_to_dbc(dbc.write_dbf(cols, [["EP", "10.00"], ["AB", "2.50"]])))
+    with open(os.path.join(d, "PAPE2502.dbf"), "wb") as fh:
+        fh.write(dbc.write_dbf(cols, [["PG", "30.00"]]))
+    with open(os.path.join(d, "PAPE2503.dbc"), "wb") as fh:
+        fh.write(b"\x99\x99 this is not an implode stream at all")
+
+    members = spark.read.format("binaryFile").load(d).select(
+        F.element_at(F.split("path", "/"), -1).alias("member_basename"), "content"
+    )
+    via_fn = dbc.read_dbc(members, columns=cols, mode="PERMISSIVE")
+    via_batch = (
+        spark.read.format("dbc").option("corruptColumn", "_decode_error").load(d)
+    )
+    out = str(tmp_path / "out")
+    q = (
+        spark.readStream.format("dbc")
+        .option("corruptColumn", "_decode_error")
+        .load(d)
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    q.stop()
+    via_stream = spark.read.parquet(out)
+
+    names = [*cols, "arquivo_origem", "_decode_error"]
+    got = [
+        sorted((tuple(r[c] for c in names) for r in df.collect()), key=repr)
+        for df in (via_fn, via_batch, via_stream)
+    ]
+    assert got[0] == got[1] == got[2]
+    assert [r[:3] for r in got[0]] == [
+        ("AB", "2.50", "PAPE2501"),
+        ("EP", "10.00", "PAPE2501"),
+        ("PG", "30.00", "PAPE2502"),
+        (None, None, "PAPE2503"),
+    ]
+    assert got[0][-1][3].startswith("ValueError: not a .dbc")
 
 
 def test_dbc_corrupt_column_collision_rejected(spark, tmp_path):
